@@ -1,6 +1,8 @@
 package graft.ohlcv
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,27 +18,6 @@ import org.apache.spark.sql.functions._
 object Forecast {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Follow-on fetch (J2) as a compositional step over the *windows* table
-    * itself: the follow-on of a match starting at `start_idx` with query
-    * window length `seqLen` and horizon `predWindow` is the RAW values of
-    * the window starting at `start_idx + seqLen`, truncated to
-    * `predWindow`. Requires `predWindow <= seqLen` (true for the
-    * reference's 192 ≤ 256); the join is an equi-join on
-    * (key, start_idx+seqLen) — hash-joinable, no range scan needed.
-    */
-  def withFollowOn(matches: DataFrame, windows: DataFrame, keyCol: String,
-      seqLen: Int, predWindow: Int): DataFrame = {
-    require(predWindow <= seqLen, "predWindow must be <= seqLen (follow-on is a window prefix)")
-    val follow = windows.select(
-      col(keyCol),
-      (col("start_idx") - seqLen).as("__match_start"),
-      slice(col("values"), 1, predWindow).as("follow_values"))
-    matches.join(follow,
-      matches(keyCol) === follow(keyCol) && matches("start_idx") === follow("__match_start"),
-      "inner")
-      .drop(follow(keyCol)).drop("__match_start")
-  }
 
   /** Scale transfer (F7, `test.ipynb:813,820`): re-standardize the
     * follow-on by the MATCH window's (center, scale), yielding the
@@ -84,12 +65,12 @@ object Forecast {
     * `test.ipynb` cell 20: queries come from the VALIDATION windows,
     * matches from the disjoint TRAIN windows — no overlap leakage).
     * `excludeSelf` only matters when both sides are the same frame.
-    */
-  /** With `crossKey`, matches may come from ANY series key — the
+    *
+    * With `crossKey`, matches may come from ANY series key — the
     * reference's multi-symbol union corpus searched as one index space
     * (U2, `train.py:42-43` ConcatDataset consumed at `test.ipynb:812`).
-    */
-  /** With `lshPlanes`, candidate generation is bucketed: both sides get a
+    *
+    * With `lshPlanes`, candidate generation is bucketed: both sides get a
     * random-hyperplane signature over the embedding and the join adds an
     * equality on it — the sub-linear search path the reference asks for
     * (`README.md:155`), with the exact metric re-ranking inside each
@@ -113,17 +94,28 @@ object Forecast {
     * callers wanting a deterministic bucketing pass `lshPlanes`, which
     * makes the fallback physical-only on every path.
     *
+    * Query side: while the query frame holds at most `broadcastQueryLimit`
+    * rows, its five search columns are collected once (a `limit` of one
+    * row over the bound, so the driver never holds more than the
+    * broadcast would) and the per-key stride and follow-on filter run on
+    * the driver. The kept rows come back as a local relation: its size is
+    * the exact query count, it broadcasts without a Spark job, and a
+    * query frame that is itself local (an interactive `createDataFrame`)
+    * is read without one too. Past the bound the stride runs distributed
+    * as one per-key min/max aggregate, broadcast-joined back.
+    *
     * `queryCountHint`: a cheap caller-side estimate of the POST-STRIDE
     * query count (the flagship derives it from the window count it
     * already materializes on its persisted frame: `winCount / stride`
-    * plus slack for the ≤1-per-key stride remainder). When given, the
-    * broadcast decision costs no planning-time action. The branch is a
-    * join-strategy heuristic: on the keyed path a wrong hint only trades
-    * broadcast for a shuffled (still exact) join or vice versa; on the
-    * crossKey path an overestimate can trip the ANN switch, so crossKey
-    * callers should overestimate only knowingly. Without a hint the
-    * operator falls back to counting `queries0` — cheap iff the caller
-    * persisted the window frame.
+    * plus slack for the ≤1-per-key stride remainder). A hint over the
+    * bound skips the collect and selects the over-limit branch outright.
+    * On the distributed path the hint decides the branch with no
+    * planning-time action; without one the operator counts the strided
+    * query side — cheap iff the caller persisted the window frame. The
+    * branch is a join-strategy heuristic: on the keyed path a wrong hint
+    * only trades broadcast for a shuffled (still exact) join or vice
+    * versa; on the crossKey path an overestimate can trip the ANN switch,
+    * so crossKey callers should overestimate only knowingly.
     */
   def evaluateSplit(corpusWins: DataFrame, queryWins: DataFrame, keyCol: String,
       seqLen: Int, predWindow: Int, stride: Int, k: Int, metricName: String,
@@ -136,17 +128,21 @@ object Forecast {
     val corpus0 = corpusWins.join(broadcast(maxIdx), Seq(keyCol))
       .filter(col("start_idx") <= col("__max_idx") - seqLen)
       .select(col(keyCol), col("start_idx"), col("center"), col("scale"), col("embedding"))
-    val minIdx = queryWins.groupBy(keyCol).agg(min("start_idx").as("__min_idx"))
-    val qMaxIdx = queryWins.groupBy(keyCol).agg(max("start_idx").as("__qmax_idx"))
-    val queries0 = queryWins.join(broadcast(minIdx), Seq(keyCol))
-      .join(broadcast(qMaxIdx), Seq(keyCol))
-      .filter(((col("start_idx") - col("__min_idx")) % stride === 0) &&
-        col("start_idx") <= col("__qmax_idx") - seqLen)
-      .select(col(keyCol).as("q_key"), col("start_idx").as("q_start"),
-        col("center").as("q_center"), col("scale").as("q_scale"),
-        col("embedding").as("q_embedding"))
+    val qSide = queryWins.select(col(keyCol), col("start_idx"), col("center"),
+      col("scale"), col("embedding"))
+    val local =
+      if (queryCountHint.exists(_ > broadcastQueryLimit)) None
+      else localQueries(qSide, seqLen, stride, broadcastQueryLimit)
+    val queries0 = local.getOrElse {
+      val bounds = qSide.groupBy(keyCol)
+        .agg(min("start_idx").as("__min_idx"), max("start_idx").as("__qmax_idx"))
+      qSide.join(broadcast(bounds), Seq(keyCol))
+        .filter(((col("start_idx") - col("__min_idx")) % stride === 0) &&
+          col("start_idx") <= col("__qmax_idx") - seqLen)
+        .drop("__min_idx", "__qmax_idx")
+    }.toDF("q_key", "q_start", "q_center", "q_scale", "q_embedding")
 
-    val useBroadcast =
+    val useBroadcast = local.isDefined ||
       queryCountHint.getOrElse(queries0.count()) <= broadcastQueryLimit
     // Over-limit: keyed path needs no planes (exact shuffled equi-join);
     // crossKey without caller planes auto-derives them — an exact→ANN
@@ -187,6 +183,30 @@ object Forecast {
     val top = crossed.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
     top.select(col("q_key"), col("q_start"), col("q_center"), col("q_scale"),
       col(keyCol), col("start_idx"), col("center"), col("scale"), col("rank"))
+  }
+
+  /** The strided query side of [[evaluateSplit]] built on the driver
+    * from `qSide` = (key, start_idx, center, scale, embedding), or None
+    * when `qSide` holds more than `limit` rows. Per key it keeps every
+    * `stride`-th window from the key's first start that still has a
+    * follow-on window; null keys and null starts drop out, as they do in
+    * the distributed inner join.
+    */
+  private def localQueries(qSide: DataFrame, seqLen: Int, stride: Int,
+      limit: Long): Option[DataFrame] = {
+    val cap = math.max(-1L, math.min(limit, Int.MaxValue - 1L)).toInt
+    val rows = qSide.limit(cap + 1).collect()
+    if (rows.length > cap) None
+    else {
+      def start(r: Row) = r.getAs[Number](1).longValue
+      val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).groupBy(_.get(0))
+        .values.flatMap { rs =>
+          val starts = rs.map(start)
+          val (lo, hi) = (starts.min, starts.max)
+          rs.filter(r => (start(r) - lo) % stride == 0 && start(r) <= hi - seqLen)
+        }
+      Some(qSide.sparkSession.createDataFrame(kept.toSeq.asJava, qSide.schema))
+    }
   }
 
   /** Steps 4–5 of [[evaluate]] applied to its top-k output: fetch

@@ -1,6 +1,13 @@
 package graft.ohlcv
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
 import graft.SparkSpec
 
 class WindowsSearchForecastSpec extends SparkSpec {
@@ -152,6 +159,73 @@ class WindowsSearchForecastSpec extends SparkSpec {
     // A huge hint forces the shuffled branch; a small one the broadcast
     // branch — identical rows either way (keyed path is always exact).
     assert(run(Long.MaxValue) == run(1L) && run(1L).nonEmpty)
+  }
+
+  private def twoKeyWins(n: Int) =
+    Windows.slidingZscored((0 until n).flatMap(i => Seq(
+      ("a", i.toLong, math.sin(i / 3.0) * 10 + i * 0.1),
+      ("b", i.toLong, math.cos(i / 4.0) * 8 + i * 0.2)))
+      .toDF("user_id", "idx", "close"), "user_id", "idx", "close", len = 12)
+      .withColumn("embedding", Encode.meanPool(col("zvalues"), 12, 4))
+
+  test("evaluateSplit local query side equals the distributed one, null keys dropped") {
+    val wins = twoKeyWins(80)
+    // One null-key query: a window and its follow-on, which the stride
+    // and follow-on filter alone would keep.
+    val nullKey = wins.filter(col("user_id") === "a" && col("start_idx").isin(0L, 12L))
+      .withColumn("user_id", lit(null).cast("string"))
+    val queries = wins.unionByName(nullKey)
+    // 2 × 69 windows + the null-key pair before the stride, 2 × 10 after:
+    // a limit between the two forces the distributed stride while the
+    // strided count still selects the exact broadcast search.
+    assert(queries.count() == 140L)
+    def run(crossKey: Boolean, limit: Long) = {
+      val top = Forecast.evaluateSplit(wins, queries, "user_id",
+        seqLen = 12, predWindow = 6, stride = 6, k = 2, metricName = "l1",
+        excludeSelf = true, crossKey = crossKey, broadcastQueryLimit = limit)
+      val local = top.queryExecution.analyzed.collect {
+        case r: LocalRelation if r.output.exists(_.name == "embedding") => r
+      }.nonEmpty
+      val rows = top.select("q_key", "q_start", "start_idx", "rank")
+        .as[(String, Long, Long, Int)].collect().toSet
+      (local, rows)
+    }
+    for (crossKey <- Seq(false, true)) {
+      val (localPath, localRows) = run(crossKey, 1L << 18)
+      val (distPath, distRows) = run(crossKey, 64L)
+      assert(localPath && !distPath)
+      assert(localRows == distRows)
+      assert(localRows.map(r => (r._1, r._2)).size == 20)
+      assert(localRows.forall(_._1 != null))
+    }
+  }
+
+  test("evaluateSplit fires no Spark job while built over a local query frame") {
+    val wins = twoKeyWins(80).persist()
+    try {
+      wins.count()
+      val rows = wins.filter(col("user_id") === "b" && col("start_idx").isin(30L, 42L)).collect()
+      val q = spark.createDataFrame(rows.toSeq.asJava, wins.schema)
+      val group = "evaluateSplit-build"
+      val jobs = new AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val top = try {
+        spark.sparkContext.setJobGroup(group, "build evaluateSplit")
+        try Forecast.evaluateSplit(wins, q, "user_id", seqLen = 12, predWindow = 6,
+          stride = 6, k = 3, metricName = "l1", crossKey = true)
+        finally spark.sparkContext.clearJobGroup()
+      } finally {
+        ListenerBridge.waitUntilListenerBusEmpty(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(jobs.get == 0)
+      assert(top.select("q_start").as[Long].collect().toSeq == Seq(30L, 30L, 30L))
+    } finally wins.unpersist()
   }
 
   test("meanPool: 8->2 buckets") {
